@@ -7,8 +7,9 @@ holding the *maximum* confidence via conditional updates (:85-97), plus
 Person/Bicycle/Motorcycle instance counts (:63-83, 101-114).
 
 Spark shape: the whole Lambda+DynamoDB dance is
-``explode(labels) -> groupBy(ts, camera) -> pivot(label).max(conf) + counts``
-— one shuffle, idempotent under duplicate delivery (max is commutative/
+``explode(labels) -> groupBy(ts, camera).agg(max(when(label = v, conf)) per
+label + counts)`` — one aggregation, so one shuffle and one run of the
+detector lineage, idempotent under duplicate delivery (max is commutative/
 idempotent, which is exactly why the reference's conditional update was safe
 under SQS at-least-once, ST2).
 
@@ -38,7 +39,7 @@ def stub_detector(seed_col: Column, conf_col: Column) -> Column:
     Emits 1-2 labels derived from a seed column: label id = seed % 5 mapped
     onto a fixed vocabulary, confidence from ``conf_col``, instance count
     from seed % 3. Mirrors what a real detector UDF returns so the
-    downstream pivot/count plan is identical in tests and production.
+    downstream per-label max/count plan is identical in tests and production.
     """
     name = F.element_at(
         F.array(F.lit("Person"), F.lit("Car"), F.lit("Bicycle"), F.lit("Truck"), F.lit("Motorcycle")),
@@ -70,7 +71,7 @@ def explode_labels(
     per PROCESSED image, detections or not, and "frames with ped_count
     = 0" must include them. Plain explode silently dropped such frames
     (r7 review; the always-nonempty stub hid it). The explicit-values
-    pivot in detections_wide ignores the NULL label, so downstream
+    max columns of detections_wide match no NULL label, so downstream
     schemas are unchanged.
     """
     return df.select(*key_cols, F.explode_outer(labels_col).alias("l")).select(
@@ -88,18 +89,19 @@ def detections_wide(
 ) -> DataFrame:
     """Wide detections table: max confidence per label + VRU counts (A1/A2/K6).
 
-    ``label_values`` must be the bounded label vocabulary — passing it
-    explicitly keeps the pivot single-pass (no distinct-discovery scan),
-    mirroring the reference's bounded DynamoDB attribute space.
+    ``label_values`` must be the bounded label vocabulary, mirroring the
+    reference's bounded DynamoDB attribute space: each value becomes one
+    ``max(confidence) FILTER (WHERE label = v)`` column of the same single
+    ``groupBy(key_cols)`` that sums the counts. With one aggregation the
+    upstream lineage (the Python detector) runs once, and a NULL-key group
+    is kept, as SQL ``GROUP BY`` does.
     """
-    maxes = (
-        long_df.groupBy(*key_cols)
-        .pivot("label", label_values)
-        .agg(F.round(F.max("confidence"), 3))
-    )
-    is_ped = F.col("label").isin(*PED_LABELS)
-    is_wheeler = F.col("label").isin(*WHEELER_LABELS)
-    counts = long_df.groupBy(*key_cols).agg(
+    label = F.col("label")
+    conf = F.col("confidence")
+    is_ped = label.isin(*PED_LABELS)
+    is_wheeler = label.isin(*WHEELER_LABELS)
+    return long_df.groupBy(*key_cols).agg(
+        *[F.round(F.max(F.when(label == v, conf)), 3).alias(v) for v in label_values],
         F.coalesce(F.sum(F.when(is_ped, F.col("n_instances"))), F.lit(0))
         .cast("bigint")
         .alias("ped_count"),
@@ -107,4 +109,3 @@ def detections_wide(
         .cast("bigint")
         .alias("wheeler_count"),
     )
-    return maxes.join(counts, list(key_cols))

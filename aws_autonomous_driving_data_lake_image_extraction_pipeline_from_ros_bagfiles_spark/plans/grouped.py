@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -427,51 +428,48 @@ def q69_bag_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.rosbag_split import read_bags_split
 
     cam = "/camera_front/image_raw"
-    conf_key = "spark.sql.python.filterPushdown.enabled"
-    prior = spark.conf.get(conf_key, "false")
     work = tempfile.mkdtemp(prefix="bag_dsv2_")
-    try:
-        spark.conf.set(conf_key, "true")
-        path = os.path.join(work, "indexed.bag")
-        with open(path, "wb") as f:
-            f.write(build_indexed_bag(n_frames=16, n_chunks=4))
-        register_rosbag_source(spark)
-        full = spark.read.format("rosbag").option("path", path).load()
-        pushed = (
-            spark.read.format("rosbag").option("path", path).load()
-            .filter(F.col("topic") == cam)
+    # removed at exit, not on return: under plan_audit materialize() is
+    # a no-op, and explaining the returned lineage runs the source's
+    # pushFilters, which opens this bag
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    path = os.path.join(work, "indexed.bag")
+    with open(path, "wb") as f:
+        f.write(build_indexed_bag(n_frames=16, n_chunks=4))
+    register_rosbag_source(spark)
+    full = spark.read.format("rosbag").option("path", path).load()
+    pushed = (
+        spark.read.format("rosbag").option("path", path).load()
+        .filter(F.col("topic") == cam)
+    )
+    parts_full = full.rdd.getNumPartitions()
+    parts_pushed = pushed.rdd.getNumPartitions()
+    cmp_cols = ["topic", "msg_type", "ros_time", "seq"]
+    # decode each side ONCE: the two exceptAll directions plus the
+    # final aggregate would otherwise re-run the Python-DataSource
+    # bag decode per consumer (3 scans of the pushed read, 2 of the
+    # split read — the decode is the whole cost of this fixture)
+    pushed_rows = materialize(pushed.select(cmp_cols))
+    split_rows = materialize(
+        read_bags_split(spark, [path], topics=[cam]).select(cmp_cols)
+    )
+    n_diff = (
+        pushed_rows.exceptAll(split_rows).count()
+        + split_rows.exceptAll(pushed_rows).count()
+    )
+    sec = F.col("ros_time").bitwiseAND(F.lit(0xFFFFFFFF))
+    out = (
+        pushed_rows.groupBy("topic")
+        .agg(
+            F.count("*").alias("n_msgs"),
+            F.min(sec).alias("min_sec"),
+            F.max(sec).alias("max_sec"),
         )
-        parts_full = full.rdd.getNumPartitions()
-        parts_pushed = pushed.rdd.getNumPartitions()
-        cmp_cols = ["topic", "msg_type", "ros_time", "seq"]
-        # decode each side ONCE: the two exceptAll directions plus the
-        # final aggregate would otherwise re-run the Python-DataSource
-        # bag decode per consumer (3 scans of the pushed read, 2 of the
-        # split read — the decode is the whole cost of this fixture)
-        pushed_rows = materialize(pushed.select(cmp_cols))
-        split_rows = materialize(
-            read_bags_split(spark, [path], topics=[cam]).select(cmp_cols)
-        )
-        n_diff = (
-            pushed_rows.exceptAll(split_rows).count()
-            + split_rows.exceptAll(pushed_rows).count()
-        )
-        sec = F.col("ros_time").bitwiseAND(F.lit(0xFFFFFFFF))
-        out = (
-            pushed_rows.groupBy("topic")
-            .agg(
-                F.count("*").alias("n_msgs"),
-                F.min(sec).alias("min_sec"),
-                F.max(sec).alias("max_sec"),
-            )
-            .withColumn("parts_pushed", F.lit(parts_pushed))
-            .withColumn("parts_full", F.lit(parts_full))
-            .withColumn("n_diff", F.lit(n_diff).cast("bigint"))
-        )
-        return materialize(out)
-    finally:
-        spark.conf.set(conf_key, prior)
-        shutil.rmtree(work, ignore_errors=True)
+        .withColumn("parts_pushed", F.lit(parts_pushed))
+        .withColumn("parts_full", F.lit(parts_full))
+        .withColumn("n_diff", F.lit(n_diff).cast("bigint"))
+    )
+    return materialize(out)
 
 
 # --------------------------------------------------------------------------
@@ -591,11 +589,8 @@ def q95_bag_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.rosbag_fixtures import build_indexed_bag
 
     register_rosbag_source(spark)
-    conf_key = "spark.sql.python.filterPushdown.enabled"
-    prior = spark.conf.get(conf_key, "false")
     work = tempfile.mkdtemp(prefix="bag_stream_")
     try:
-        spark.conf.set(conf_key, "true")  # reader declares pushFilters
         src = f"{work}/in"
         os.makedirs(src)
 
@@ -654,7 +649,6 @@ def q95_bag_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return materialize(out)
     finally:
-        spark.conf.set(conf_key, prior)
         shutil.rmtree(work, ignore_errors=True)
 
 

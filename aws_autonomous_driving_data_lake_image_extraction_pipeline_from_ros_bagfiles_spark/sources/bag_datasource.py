@@ -13,9 +13,11 @@ Split planning (one :class:`InputPartition` per surviving chunk) reuses
 ``plan_bag_splits`` — a pruned read is visible externally as fewer RDD
 partitions, which is what q69 and tests/test_bag_datasource.py assert.
 
-Requires ``spark.sql.python.filterPushdown.enabled=true`` (off by default
-in Spark 4.1) for pushFilters to be consulted; without it the source still
-works, just with Spark applying all filters post-scan.
+Spark 4.1 refuses to scan a Python source that implements pushFilters
+unless ``spark.sql.python.filterPushdown.enabled`` is true (it is off by
+default): every read, filtered or not, fails with
+``DATA_SOURCE_PUSHDOWN_DISABLED``. :func:`register_rosbag_source` therefore
+turns the setting on for the session it registers the source on.
 
 Exactness contract for consumed filters: ``plan_bag_splits`` restricts the
 connection map shipped to each split to the selected topics, and
@@ -190,5 +192,7 @@ class RosbagDataSource(DataSource):
 
 
 def register_rosbag_source(spark) -> None:
-    """Idempotently register ``format("rosbag")`` on this session."""
+    """Idempotently register ``format("rosbag")`` on this session, with the
+    Python filter pushdown the source needs to be readable at all."""
     spark.dataSource.register(RosbagDataSource)
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")

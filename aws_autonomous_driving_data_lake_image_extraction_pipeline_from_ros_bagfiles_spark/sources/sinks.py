@@ -25,6 +25,7 @@ documented mp4 stub.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 
@@ -42,11 +43,11 @@ def _check_sanitize_collisions(
     error. One tiny distinct-collect per sink call (|topics| rows).
 
     The distinct scans ``df`` — if that lineage contains a Python decode
-    (mapInPandas), column pruning cannot skip it and the decode runs
-    TWICE per sink call (r8 review). Pass ``groups_src`` (any cheap
+    (mapInPandas), column pruning cannot skip it. A sink that scans ``df``
+    again afterwards therefore either passes ``groups_src`` (any cheap
     upstream frame carrying the same ``col`` universe, e.g. the raw
-    pre-decode table) to run the check there instead, or persist the
-    decoded frame before invoking the sink."""
+    pre-decode table) to run the check there, or holds ``df`` persisted
+    across both scans, as :func:`write_png_files` does."""
     src = df if groups_src is None else groups_src
     groups = [r[0] for r in src.select(col).distinct().collect()]
     seen: dict[str, str] = {}
@@ -97,9 +98,17 @@ def write_png_files(
     and write ``<root>/<topic-sanitized>/<img_file>`` from the executors —
     the distributed analog of bagstream.py:246-266's per-frame cv2.imwrite
     (at scale each task PUTs to the object store exactly like the
-    reference's upload queue, K4). Returns the number of files written."""
+    reference's upload queue, K4). Returns the number of files written.
 
-    _check_sanitize_collisions(decoded, "topic", groups_src)
+    ``name_col`` must hold plain file names: an absolute name or one with
+    a directory part would land outside ``<root>/<topic>``
+    (``os.path.join`` drops everything before an absolute component), so
+    the write fails with a ValueError naming the frame.
+
+    The collision check and the write both scan ``decoded``. Without
+    ``groups_src``, an uncached ``decoded`` is persisted for the two scans
+    and unpersisted on return, so its Python lineage (bag read, decode)
+    runs once; a frame the caller already cached is left as it is."""
 
     def write_batches(batches):
         import os
@@ -113,6 +122,11 @@ def write_png_files(
             for topic, name, pix, w, h in zip(
                 pdf["topic"], pdf[name_col], pdf["pixels"], pdf["img_width"], pdf["img_height"]
             ):
+                if name in ("", ".", "..") or os.path.basename(name) != name:
+                    raise ValueError(
+                        f"frame {name!r} ({topic}): {name_col} is not a plain"
+                        " file name — it would be written outside the sink root"
+                    )
                 # input contract: decode_frames output (RGB-normalized,
                 # exactly w*h*3). A raw img_data buffer fed here would be
                 # SILENTLY truncated by the encoder (rgba -> scrambled
@@ -130,7 +144,15 @@ def write_png_files(
                 n += 1
         yield pd.DataFrame({"n": [n]})
 
-    counts = decoded.mapInPandas(write_batches, schema="n bigint").collect()
+    own_cache = groups_src is None and decoded.storageLevel == StorageLevel.NONE
+    if own_cache:
+        decoded.persist()
+    try:
+        _check_sanitize_collisions(decoded, "topic", groups_src)
+        counts = decoded.mapInPandas(write_batches, schema="n bigint").collect()
+    finally:
+        if own_cache:
+            decoded.unpersist(blocking=True)
     return sum(r["n"] for r in counts)
 
 

@@ -24,9 +24,7 @@ def bag_path(spark, tmp_path_factory):
     with open(path, "wb") as f:
         f.write(build_indexed_bag(n_frames=16, n_chunks=4))
     register_rosbag_source(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    yield path
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
+    return path
 
 
 def _read(spark, path):
@@ -39,6 +37,16 @@ def test_full_read_matches_split_reader(spark, bag_path):
     ref = read_bags_split(spark, [bag_path]).select(cols)
     assert ds.exceptAll(ref).count() == 0 and ref.exceptAll(ds).count() == 0
     assert ds.rdd.getNumPartitions() == 4  # one task per chunk
+
+
+def test_register_enables_pushdown_on_default_session(spark, bag_path):
+    """Spark leaves Python filter pushdown off by default, and then a source
+    that implements pushFilters cannot be scanned at all, not even
+    unfiltered: registering the source must turn the setting on."""
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
+    register_rosbag_source(spark)
+    assert _read(spark, bag_path).count() == read_bags_split(spark, [bag_path]).count()
+    assert _read(spark, bag_path).filter(F.col("topic") == CAM).count() == 8
 
 
 def test_equalto_pushdown_prunes_chunks(spark, bag_path):
